@@ -22,16 +22,13 @@ Two resolution modes:
 
   * ``resolve_exact`` — reference-parity sequential semantics: the per-doc
     DFS with true consume-once ordering and the spatial fallback cascade,
-    run as a vectorized kernel behind ``mapInArrow`` (r8 default; the
-    mapInPandas / applyInPandas entries remain as parity paths — docs are
-    independent and small, the natural unit of parallelism at 10^12-doc
-    scale; there is no cross-doc dataflow, so this parallelizes linearly).
+    run as a vectorized kernel behind ``mapInArrow``. Docs are independent
+    and small, the natural unit of parallelism at 10^12-doc scale; there is
+    no cross-doc dataflow, so this parallelizes linearly.
     Matches the pure-Python oracle (oracle/pycascade.py) bit-for-bit.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,9 +43,7 @@ def live_features(features: DataFrame) -> DataFrame:
     return features.filter(F.col("span_idx").isNotNull() & (F.col("n_live") > 0))
 
 
-def candidate_edges(
-    features: DataFrame, materialize: bool = False, dedup: bool = True
-) -> DataFrame:
+def candidate_edges(features: DataFrame, dedup: bool = True) -> DataFrame:
     """Union of candidate (child, parent, stage) edges for the five cascade
     stages. Returns columns:
     doc_id, child_idx, parent_idx, join_kind, priority, p_offset, root_idx.
@@ -79,18 +74,8 @@ def candidate_edges(
     parent row can never appear in its own surviving candidate list, and
     the per-(doc, key) prefix equals the per-parent prefix exactly. The
     window therefore runs once over the n-row target table instead of over
-    the edge fan-out.
-
-    materialize: persist ONE slim projection (drops the text/geometry
-    columns; keeps the join scalars + ref_tokens) that the probe/target
-    branches fan out from — a single upstream evaluation instead of one per
-    branch, without paying to cache the full feature table."""
+    the edge fan-out."""
     f = live_features(features)
-    if materialize:
-        f = f.select(
-            "doc_id", "span_idx", "kind", "media_ref", "offset",
-            "key", "valid", "root_idx", "ref_tokens",
-        ).persist()
 
     # target: spans addressable by key. The redirect prefix rule (rn up to
     # and including the first valid hit, per (doc_id, key), ordered by
@@ -127,12 +112,8 @@ def candidate_edges(
     # sides grow with the data, so a broadcast is not on the table anyway;
     # shuffled-hash keeps the window-exchange reuse and skips sort-merge's
     # per-side sorts, the build side is the narrower table, and AQE's
-    # skew-join splitting applies to SHJ. Env override for memory-tight
-    # clusters where the per-partition hash build is the binding risk
-    # ('merge') or to let the planner decide by size ('auto').
-    strategy = os.environ.get("SPARK_GRAFT_CASCADE_JOIN", "shuffle_hash")
-    if strategy in ("shuffle_hash", "merge", "broadcast"):
-        tgt = tgt.hint(strategy)
+    # skew-join splitting applies to SHJ.
+    tgt = tgt.hint("shuffle_hash")
 
     # probes: one row per pointer lookup, generated by a SINGLE scan — each
     # span contributes a small array of (ptr, probe) structs (0-1 redirect,
@@ -285,7 +266,7 @@ def resolve_rank(
         ).localCheckpoint()
     f = live_features(features).select("doc_id", "span_idx", "root_idx")
     if edges is None:
-        edges = candidate_edges(features, materialize=False, dedup=False)
+        edges = candidate_edges(features, dedup=False)
     # spans with no candidate edge fall to the doc root: modeled as a
     # synthetic lowest-priority edge per non-root span rather than a
     # left-anti join against the winners — the anti-join variant makes the
@@ -341,30 +322,18 @@ def resolve_rank(
     return out.select([c.name for c in JOIN_RESULT_SCHEMA.fields])
 
 
-def resolve_exact(features: DataFrame, method: str = "arrow") -> DataFrame:
-    """Reference-parity sequential cascade per doc (operators/kernel.py).
-
-    method='arrow' (default, r8): hash-repartition by doc_id +
-    sortWithinPartitions (docs contiguous in the Arrow stream) +
-    ``mapInArrow`` — numpy views straight off the Arrow buffers, no
-    pandas block-manager round trip (guide §4.2; the conversion was most
-    of the kernel stage's Python-side cost). method='batch': the prior
-    ``mapInPandas`` entry over the same kernel (kept as the independently
-    converted parity path). method='group': applyInPandas
-    one-frame-per-doc (the second parity check)."""
-    from har2tree_spark.operators.kernel import (  # noqa: PLC0415
-        KERNEL_COLS,
-        cascade_batch,
-        cascade_batch_arrow,
-        cascade_kernel,
-    )
+def resolve_exact(features: DataFrame) -> DataFrame:
+    """Reference-parity sequential cascade per doc (operators/kernel.py):
+    hash-repartition by doc_id + sortWithinPartitions (docs contiguous in
+    the Arrow stream) + ``mapInArrow`` — numpy views straight off the Arrow
+    buffers, no pandas block-manager round trip (guide §4.2; the conversion
+    was most of the kernel stage's Python-side cost)."""
+    from har2tree_spark.operators.kernel import KERNEL_COLS, cascade_batch_arrow  # noqa: PLC0415
 
     f = live_features(features).select(*KERNEL_COLS)
-    if method == "group":
-        return f.groupBy("doc_id").applyInPandas(cascade_kernel, JOIN_RESULT_SCHEMA)
     # full ordering done JVM-side (we shuffle anyway, and Tungsten sort is
-    # far cheaper than a pandas object-dtype sort per Arrow batch); the
-    # kernel trusts the (doc_id, offset, span_idx) stream order.
+    # far cheaper than a per-batch sort in Python); the kernel trusts the
+    # (doc_id, offset, span_idx) stream order.
     # EXPLICIT partition count (1 task/core): repartition("doc_id") without
     # a count lets AQE coalesce by shuffle BYTES — but this stage's cost is
     # Python-kernel CPU per row, not bytes, so AQE under-partitions it
@@ -375,13 +344,9 @@ def resolve_exact(features: DataFrame, method: str = "arrow") -> DataFrame:
     # without adding parallelism (r8 measured, 20k-doc corpus: 128 tasks on
     # 32 cores 2.56s vs 32 tasks 1.12s — and the gap persists at 10x rows
     # because docs hash-spread evenly, so one wave has no straggler tail).
-    # SPARK_GRAFT_KERNEL_WAVES (default 1) scales it back up for clusters
-    # where per-partition skew, not per-task overhead, is the binding risk.
-    waves = max(1, int(os.environ.get("SPARK_GRAFT_KERNEL_WAVES", "1")))
-    n_parts = waves * f.sparkSession.sparkContext.defaultParallelism
-    clustered = f.repartition(n_parts, "doc_id").sortWithinPartitions(
-        "doc_id", "offset", "span_idx"
+    n_parts = f.sparkSession.sparkContext.defaultParallelism
+    return (
+        f.repartition(n_parts, "doc_id")
+        .sortWithinPartitions("doc_id", "offset", "span_idx")
+        .mapInArrow(cascade_batch_arrow, JOIN_RESULT_SCHEMA)
     )
-    if method == "batch":
-        return clustered.mapInPandas(cascade_batch, JOIN_RESULT_SCHEMA)
-    return clustered.mapInArrow(cascade_batch_arrow, JOIN_RESULT_SCHEMA)

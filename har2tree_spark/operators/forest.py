@@ -11,14 +11,16 @@ operator where doc_id is NOT a join key, so it shuffles on the feature key;
 the per-doc summary table it joins is tiny relative to the corpus (one row
 per doc), so at scale both sides are doc-count-sized, not span-count-sized.
 
-Forest roots are resolved by pointer doubling over the doc-level parent
-edges (log2(forest depth) self-joins); cycles are broken by keeping each
-doc's current ancestor at the iteration cap (deterministic)."""
+Forest roots are resolved by the engine's one pointer-doubling walk
+(stats.ancestors) over the doc-level parent edges; a doc whose walk ends in
+a cycle becomes its own forest root."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from har2tree_spark.operators import stats
 
 
 def doc_summaries(features: DataFrame, join_result: DataFrame) -> DataFrame:
@@ -92,45 +94,21 @@ def forest_edges(features: DataFrame, join_result: DataFrame) -> DataFrame:
     )
 
 
-def forest_roots(edges: DataFrame, all_docs: DataFrame, max_doubling: int = 10) -> DataFrame:
+def forest_roots(edges: DataFrame, all_docs: DataFrame) -> DataFrame:
     """(doc_id, forest_root): follow doc-level parent pointers to the top
-    by pointer doubling. Docs with no parent are their own root."""
-    cur = (
+    with :func:`stats.ancestors`, one group over all docs. Docs with no
+    parent are their own root; a doc whose walk ends in a cycle gets a
+    null root."""
+    walk = stats.ancestors(
         all_docs.select("doc_id")
         .join(edges.withColumnRenamed("child_doc", "doc_id"), "doc_id", "left")
         .select(
-            "doc_id", F.coalesce("parent_doc", F.col("doc_id")).alias("anc")
+            F.lit(0).alias("doc_id"),
+            F.col("doc_id").alias("node"),
+            F.col("parent_doc").alias("parent"),
         )
-        .localCheckpoint()
     )
-    for _ in range(max_doubling):
-        nxt = (
-            cur.alias("a")
-            .join(
-                cur.select(
-                    F.col("doc_id").alias("anc"), F.col("anc").alias("anc2")
-                ).alias("b"),
-                "anc",
-                "left",
-            )
-            .select(
-                "doc_id", F.coalesce(F.col("anc2"), F.col("anc")).alias("anc")
-            )
-            .localCheckpoint()
-        )
-        # converged when nothing moved; cycles stabilize at the cap
-        if (
-            nxt.alias("x")
-            .join(cur.alias("y"), "doc_id")
-            .filter(F.col("x.anc") != F.col("y.anc"))
-            .limit(1)
-            .count()
-            == 0
-        ):
-            cur = nxt
-            break
-        cur = nxt
-    return cur.select("doc_id", F.col("anc").alias("forest_root"))
+    return walk.select(F.col("node").alias("doc_id"), F.col("root").alias("forest_root"))
 
 
 def forest_join(features: DataFrame, join_result: DataFrame) -> DataFrame:

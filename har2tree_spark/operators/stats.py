@@ -3,33 +3,101 @@
 Re-grounds the reference's ``stats`` property (reference har2tree.py:505-528;
 golden values asserted at tests/simple_test.py:63-75), the HostNode rollups
 (nodes.py:802-835, :735-760) and ``build_all_hashes`` (har2tree.py:550-569)
-as single groupBy aggregates, plus a scalable pointer-doubling depth operator
-for the tree-depth / redirect-chain figures (Spark has no recursion; depth
-over parent pointers converges in ceil(log2(depth)) self-joins).
+as single groupBy aggregates, plus the engine's one pointer-doubling
+ancestor walk (:func:`ancestors`) behind the tree-depth / redirect-chain
+figures, the forest roots and the pages-ladder cycle guard (Spark has no
+recursion; a walk over parent pointers resolves in log2(group size)
+self-joins).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from har2tree_spark.geo import grid
 
 
+def ancestors(edges: DataFrame) -> DataFrame:
+    """(doc_id, node, parent) -> (doc_id, node, root, depth, on_cycle): the
+    one exact ancestor walk behind every tree walk in the engine (tree
+    depth, forest roots, the pages-ladder cycle guard).
+
+    A null parent (or -1, for numeric ids) marks a root; ``node`` is unique
+    within its ``doc_id`` group. The input projection is materialised ONCE
+    and the pass count N is bounded from that checkpoint: the bit length of
+    the largest group's row count, so 2^N exceeds every root path and every
+    tail leading into a cycle. No per-pass convergence action.
+
+    Each row carries (anc, steps, done): ``anc`` is the node ``steps`` hops
+    up, a root is its own fixed point (anc = itself, steps 0, done), and a
+    pass replaces anc by anc's anc. After N passes a row is done iff its
+    walk reached a root, and then root = anc, depth = steps. A row whose
+    walk never reaches a root (on a cycle, on a tail into one, or under a
+    parent missing from its group) gets a null root and depth.
+
+    Cycle rule: the N-step map is a bijection on each cycle and sends every
+    tail row onto its cycle, so the final ancestors of the rows that never
+    reached a root are exactly the cycle members — ``on_cycle`` is one
+    semi-join, no extra pass (and the planner drops it for a caller that
+    reads only root/depth)."""
+    parent = F.col("parent")
+    is_root = parent.isNull()
+    if isinstance(edges.schema["parent"].dataType, NumericType):
+        is_root = is_root | (parent == -1)
+    cur = edges.select(
+        "doc_id",
+        "node",
+        F.when(is_root, F.col("node")).otherwise(parent).alias("anc"),
+        F.when(is_root, 0).otherwise(1).alias("steps"),
+        is_root.alias("done"),
+    ).localCheckpoint()
+    top = cur.groupBy("doc_id").count().agg(F.max("count")).first()[0]
+    for _ in range(max(1, int(top or 1).bit_length())):
+        up = cur.select(
+            "doc_id",
+            F.col("node").alias("anc"),
+            F.col("anc").alias("anc2"),
+            F.col("steps").alias("steps2"),
+            F.col("done").alias("done2"),
+        )
+        cur = (
+            cur.join(up, ["doc_id", "anc"], "left")
+            .select(
+                "doc_id",
+                "node",
+                F.coalesce("anc2", "anc").alias("anc"),
+                (F.col("steps") + F.coalesce("steps2", F.lit(0))).alias("steps"),
+                F.coalesce("done2", "done").alias("done"),
+            )
+            .localCheckpoint()
+        )
+    cyc = (
+        cur.filter(~F.col("done"))
+        .select("doc_id", F.col("anc").alias("node"))
+        .distinct()
+        .withColumn("on_cycle", F.lit(True))
+    )
+    return cur.join(cyc, ["doc_id", "node"], "left").select(
+        "doc_id",
+        "node",
+        F.when(F.col("done"), F.col("anc")).alias("root"),
+        F.when(F.col("done"), F.col("steps")).alias("depth"),
+        F.coalesce("on_cycle", F.lit(False)).alias("on_cycle"),
+    )
+
+
 def compute_depths(
     join_result: DataFrame,
-    max_doubling: int | None = None,
     depth_complete: bool | None = None,
 ) -> DataFrame:
     """(doc_id, span_idx, depth) from parent pointers.
 
     Exact-mode join results carry ``depth`` already (the DFS computes it for
-    free) — pass through with zero jobs. Otherwise: pointer doubling; each
-    pass jumps every node twice as far up its ancestor chain, so depth up to
-    2^k resolves in k shuffles. The iteration count is bounded ONCE from the
-    largest per-doc row count (one cheap agg) instead of a convergence
-    action per pass — per-pass driver actions were the scaling bottleneck
-    (fixed latency independent of cores).
+    free) — pass through with zero jobs. Otherwise: :func:`ancestors` over
+    the parent pointers (exact; a span whose walk never reaches the root
+    gets a null depth).
 
     ``depth_complete`` is the path switch for frames that carry a ``depth``
     column: True = trust it (zero jobs), False = ignore it and re-derive by
@@ -46,39 +114,12 @@ def compute_depths(
         probe = join_result.select("depth").limit(1).collect()
         if probe and probe[0][0] is not None:
             return join_result.select("doc_id", "span_idx", "depth")
-    if max_doubling is None:
-        max_rows = (
-            join_result.groupBy("doc_id").count().agg(F.max("count")).collect()[0][0]
-        )
-        max_doubling = max(1, int(max_rows or 1).bit_length())
-    cur = join_result.select(
-        "doc_id",
-        F.col("span_idx").alias("node"),
-        F.col("parent_idx").alias("anc"),
-        F.when(F.col("parent_idx") == -1, 0).otherwise(1).alias("steps"),
-    ).localCheckpoint()
-    for _ in range(max_doubling):
-        cur = (
-            cur.alias("a")
-            .join(
-                cur.select(
-                    "doc_id",
-                    F.col("node").alias("anc"),
-                    F.col("anc").alias("anc2"),
-                    F.col("steps").alias("steps2"),
-                ).alias("b"),
-                ["doc_id", "anc"],
-                "left",
-            )
-            .select(
-                "doc_id",
-                "node",
-                F.coalesce(F.col("anc2"), F.col("anc")).alias("anc"),
-                (F.col("steps") + F.coalesce(F.col("steps2"), F.lit(0))).alias("steps"),
-            )
-            .localCheckpoint()
-        )
-    return cur.select("doc_id", F.col("node").alias("span_idx"), F.col("steps").alias("depth"))
+    edges = join_result.select(
+        "doc_id", F.col("span_idx").alias("node"), F.col("parent_idx").alias("parent")
+    )
+    return ancestors(edges).select(
+        "doc_id", F.col("node").alias("span_idx"), "depth"
+    )
 
 
 def doc_stats(

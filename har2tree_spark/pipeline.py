@@ -4,7 +4,7 @@ The flagship flow (reference CrawledTree lifecycle, SURVEY.md §3) with
 per-stage lineage. Shuffle budget at scale:
 
   parse          narrow (array-level ops)            0 shuffles
-  cascade exact  groupBy(doc_id) applyInPandas       1 shuffle (none if the
+  cascade exact  repartition(doc_id) mapInArrow      1 shuffle (none if the
                                                      source is bucketed/
                                                      partitioned by doc_id)
   tiles          narrow projection                   0 shuffles
@@ -30,7 +30,7 @@ def run_pipeline(
     with_depths: bool = True,
 ) -> dict[str, DataFrame]:
     """Returns the engine's output tables. ``mode``: 'exact' (reference
-    parity, applyInPandas kernel) or 'rank' (single-window relational)."""
+    parity, mapInArrow kernel) or 'rank' (single-window relational)."""
     features = parse.parse_documents(docs)
     join_result = (
         cascade.resolve_exact(features) if mode == "exact" else cascade.resolve_rank(features)
@@ -134,15 +134,16 @@ def capture_report(spark: SparkSession, path: str) -> DataFrame:
     )
     features = parse.parse_documents(caps.select("doc_id", "spans"))
     tree = pages.attach_pages(cascade.resolve_exact(features), caps)
-    # depth_complete=False: attach_pages nulls depth only on the rows it
-    # re-parents, leaving their descendants' depths stale — re-derive every
-    # depth from the post-ladder parent pointers (r7 ADVICE #1; the one-row
-    # probe in compute_depths must not see this mixed column).
-    ds = stats.doc_stats(features, tree, depth_complete=False)
+    # attach_pages nulls depth only on the rows it re-parents, leaving their
+    # descendants' depths stale: re-derive every depth ONCE from the
+    # post-ladder parent pointers (r7 ADVICE #1) and let both stats read it.
+    depths = stats.compute_depths(tree, depth_complete=False)
+    tree = tree.drop("depth").join(depths, ["doc_id", "span_idx"], "left")
+    ds = stats.doc_stats(features, tree, depth_complete=True)
     # total_redirects = whole-tree redirect-EDGE count (see redirect_chains
     # docstring: deliberately broader than the reference's root->rendered
     # ``redirects`` path list — r7 ADVICE #3, documented deviation).
-    chains = stats.redirect_chains(features, tree, depth_complete=False).select(
+    chains = stats.redirect_chains(features, tree, depth_complete=True).select(
         "doc_id", F.col("chain_len").alias("total_redirects")
     )
     totals = har_cookies.capture_cookie_totals(

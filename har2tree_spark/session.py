@@ -55,23 +55,17 @@ def get_spark(
         # stage writes 13 ms. The sort writer is the scale-safe default
         # everywhere (one data + one index file per map task regardless of
         # reduce count); bypass only ever wins when partitions are few AND
-        # file metadata ops are cheap. Env override for hosts where the
-        # bypass path is profitable.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "0"),
-        )
+        # file metadata ops are cheap (set it through extra_conf there).
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         # Unix-domain sockets for the executor<->Python-worker channel
         # (Spark 4.1). The channel is host-local by construction on any
         # deployment (workers fork next to their executor), so skipping
         # the TCP handshake+loopback stack is scale-safe, not a local-mode
         # trick. Measured (r8): identity 32-task Arrow stage 0.295 s ->
         # 0.252 s best-of-6, every sample better; ~40-50 ms saved per
-        # Python-stage job. Env override for hosts without UDS support.
-        .config(
-            "spark.python.unix.domain.socket.enabled",
-            os.environ.get("SPARK_GRAFT_PYTHON_UDS", "true"),
-        )
+        # Python-stage job. Hosts without UDS support turn it off through
+        # extra_conf.
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -116,28 +116,6 @@ def test_random_docs_exact_large_skewed(spark):
     _assert_match(spark, docs)
 
 
-def test_batch_and_group_methods_agree(spark):
-    docs = gen_docs(77, 100)
-    df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
-    feats = parse_documents(df)
-    cols = ["doc_id", "span_idx", "parent_idx", "join_kind", "priority", "depth"]
-    a = (
-        resolve_exact(feats, method="batch")
-        .toPandas()
-        .sort_values(["doc_id", "span_idx"])
-        .reset_index(drop=True)
-    )
-    b = (
-        resolve_exact(feats, method="group")
-        .toPandas()
-        .sort_values(["doc_id", "span_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    for col in cols:
-        assert (a[col].to_numpy() == b[col].to_numpy()).all(), col
-
-
 def test_rank_mode_contract(spark):
     """Rank mode: every live non-root span gets exactly one parent; priority
     respected (a child with a redirect candidate is never claimed by a
@@ -198,28 +176,22 @@ def test_stack_walk_cross_engine_fuzz(spark):
 
 
 def test_arrow_kernel_matches_pandas_kernel(spark):
-    """The r8 mapInArrow kernel entry must be row-identical to the
-    mapInPandas entry (same _run_doc core, independently converted
-    boundaries: nullable ints, list offsets, carry-over slicing). Runs
-    with a tiny Arrow batch size so docs straddle batch boundaries
+    """The mapInArrow kernel entry must be row-identical to the pure-Python
+    oracle with a tiny Arrow batch size, so docs straddle batch boundaries
     constantly — the carry/slice path (Table concat, sliced ListArray
-    offsets) is the riskiest code and must be exercised, not dodged by
-    everything fitting in one 10k-row batch."""
-    from har2tree_spark.datagen import GenConfig, gen_documents_df
-    from har2tree_spark.operators.parse import parse_documents
-
-    docs = gen_documents_df(
-        spark, 400, seed=11,
-        cfg=GenConfig(max_spans=24, p_hot=0.5, p_orphan=0.2, p_dup_invalid=0.2),
-        include_scenarios=True,
-    )
-    feats = parse_documents(docs).localCheckpoint()
+    offsets, nullable ints) is the riskiest code and must be exercised, not
+    dodged by everything fitting in one 10k-row batch."""
+    docs = gen_docs(
+        11, 400, GenConfig(max_spans=24, p_hot=0.5, p_orphan=0.2, p_dup_invalid=0.2)
+    ) + scenario_docs()
+    feats = parse_documents(spark.createDataFrame(docs, DOCUMENTS_SCHEMA)).localCheckpoint()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     spark.conf.set(key, "37")
     try:
-        a = sorted(tuple(r) for r in resolve_exact(feats, method="arrow").collect())
-        b = sorted(tuple(r) for r in resolve_exact(feats, method="batch").collect())
+        got = sorted(tuple(r) for r in resolve_exact(feats).collect())
     finally:
         spark.conf.set(key, prev)
-    assert a == b
+    cols = ["doc_id", "span_idx", "parent_idx", "join_kind", "priority", "depth"]
+    want = sorted(tuple(r[c] for c in cols) for r in pycascade.cascade_docs(docs))
+    assert got == want

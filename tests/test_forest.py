@@ -53,13 +53,30 @@ def test_forest_edges_and_roots(spark):
 
 
 def test_forest_cycle_terminates(spark):
-    # two docs pointing at each other's landing keys: must not hang
+    # two docs pointing at each other's landing keys: must not hang; a
+    # 3-doc cycle plus a tail doc pointing into it likewise. No walk in
+    # either reaches a root, so every one of these docs is its own root.
+    def doc(doc_id, key, ref):
+        return {
+            "doc_id": doc_id,
+            "spans": [{"kind": "html", "text": key, "media_ref": ref, "offset": 0}],
+        }
+
     docs = [
-        {"doc_id": "X", "spans": [{"kind": "html", "text": "k1", "media_ref": "k2", "offset": 0}]},
-        {"doc_id": "Y", "spans": [{"kind": "html", "text": "k2", "media_ref": "k1", "offset": 0}]},
+        doc("X", "k1", "k2"),
+        doc("Y", "k2", "k1"),
+        doc("P", "k10", "k11"),
+        doc("Q", "k11", "k12"),
+        doc("R", "k12", "k10"),
+        doc("T", "k13", "k10"),
     ]
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
     feats = parse_documents(df)
     jr = resolve_exact(feats)
-    fj = forest_join(feats, jr).toPandas()
-    assert len(fj) == 2  # terminated; deterministic ancestors
+    assert {
+        (r.child_doc, r.parent_doc) for r in forest_edges(feats, jr).collect()
+    } == {("X", "Y"), ("Y", "X"), ("P", "Q"), ("Q", "R"), ("R", "P"), ("T", "P")}
+    fj = forest_join(feats, jr).toPandas().set_index("doc_id")
+    assert len(fj) == 6
+    for d in "XYPQRT":
+        assert fj.loc[d, "forest_root"] == d

@@ -295,7 +295,8 @@ def test_attach_pages_duckdb_cross_check(spark, tmp_path):
     # cycle-guard replay (r7 ADVICE #2), implemented INDEPENDENTLY as a
     # plain dict walk: a re-parented row whose anchor path (over the
     # post-ladder parent map) returns to the row itself is rejected back
-    # to its original fallback edge — mirror of pages._CYCLE_WALK_CAP.
+    # to its original fallback edge. A doc's walk needs at most one hop per
+    # row, so the doc's row count bounds it exactly.
     orig = {
         (r[0], r[1]): tuple(r)
         for r in con.execute(
@@ -310,7 +311,7 @@ def test_attach_pages_duckdb_cross_check(spark, tmp_path):
     for (d, s), r in post.items():
         if r[3] in ("page", "page_rendered", "page_before"):
             cur, cyc = r[2], False
-            for _ in range(256):
+            for _ in range(len(pmap[d]) + 1):
                 if cur == s:
                     cyc = True
                     break
@@ -350,36 +351,19 @@ def test_depths_recomputed_after_page_reparenting(spark, multipage_dir):
     assert ds["tree_depth"] == 3
 
 
-def test_attach_pages_rejects_cycle_forming_anchor(spark):
-    """r7 ADVICE #2: an orphan whose ladder anchor sits in its own subtree
-    (here: the page-2 root was claimed as the orphan's resource child)
-    must NOT be re-parented — orphan->anchor->orphan would leave both
-    unreachable to the depth pass. The re-parent is rejected and the
-    orphan keeps its fallback_root edge; independent re-parents in the
-    same doc still land."""
+def _cycle_caps(spark, span_pagerefs, pages_root_idx):
     import pyspark.sql.types as T
 
-    tree = spark.createDataFrame(
-        [
-            ("d", 0, -1, "root", 0, 0),
-            # span 2 (page-2 root) is the orphan's resource CHILD
-            ("d", 2, 1, "resource", 5, None),
-            ("d", 1, 0, "fallback_root", 9, None),
-            # an unrelated orphan whose arm-A anchor (span 2) is fine
-            ("d", 3, 0, "fallback_root", 9, None),
-        ],
-        "doc_id string, span_idx int, parent_idx int, join_kind string, priority int, depth int",
-    )
-    caps = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (
                 "d",
-                None,               # rendered_span_idx
-                ["p1", "p2", "p2", "p2"],  # span_pagerefs
-                ["p1", "p2"],       # page_ids
-                [0, 2],             # pages_root_idx
-                [None, 0],          # page_before_root_idx
-                None,               # page_default_anchor_idx
+                None,                       # rendered_span_idx
+                span_pagerefs,
+                ["p1", "p2"],               # page_ids
+                pages_root_idx,
+                [None, pages_root_idx[0]],  # page_before_root_idx
+                None,                       # page_default_anchor_idx
             )
         ],
         T.StructType([
@@ -392,6 +376,27 @@ def test_attach_pages_rejects_cycle_forming_anchor(spark):
             T.StructField("page_default_anchor_idx", T.IntegerType()),
         ]),
     )
+
+
+def test_attach_pages_rejects_cycle_forming_anchor(spark):
+    """r7 ADVICE #2: an orphan whose ladder anchor sits in its own subtree
+    (here: the page-2 root was claimed as the orphan's resource child)
+    must NOT be re-parented — orphan->anchor->orphan would leave both
+    unreachable to the depth pass. The re-parent is rejected and the
+    orphan keeps its fallback_root edge; independent re-parents in the
+    same doc still land."""
+    tree = spark.createDataFrame(
+        [
+            ("d", 0, -1, "root", 0, 0),
+            # span 2 (page-2 root) is the orphan's resource CHILD
+            ("d", 2, 1, "resource", 5, None),
+            ("d", 1, 0, "fallback_root", 9, None),
+            # an unrelated orphan whose arm-A anchor (span 2) is fine
+            ("d", 3, 0, "fallback_root", 9, None),
+        ],
+        "doc_id string, span_idx int, parent_idx int, join_kind string, priority int, depth int",
+    )
+    caps = _cycle_caps(spark, ["p1", "p2", "p2", "p2"], [0, 2])
     out = {r["span_idx"]: r for r in attach_pages(tree, caps).collect()}
     # span 1: arm A would anchor to span 2, but 2's parent chain is 2->1
     # (the span itself) — rejected, stays on the original fallback edge
@@ -402,3 +407,31 @@ def test_attach_pages_rejects_cycle_forming_anchor(spark):
     assert out[3]["parent_idx"] == 2
     # untouched rows stay untouched
     assert out[2]["join_kind"] == "resource" and out[2]["parent_idx"] == 1
+
+
+def test_attach_pages_rejects_cycle_longer_than_256_hops(spark):
+    """The cycle guard is exact, not hop-capped: the orphan's page-2 root
+    hangs 300 levels below the orphan itself, so re-parenting would close a
+    301-span cycle whose walk back to the orphan takes 300 hops. It is
+    rejected like the short one, and the resulting tree's depths all
+    resolve."""
+    from har2tree_spark.operators import stats
+
+    n = 300
+    rows = [("d", 0, -1, "root", 0, 0), ("d", 1, 0, "fallback_root", 9, None)]
+    # chain 1 <- 2 <- ... <- n+1: span k is span k-1's resource child
+    rows += [("d", k, k - 1, "resource", 5, None) for k in range(2, n + 2)]
+    tree = spark.createDataFrame(
+        rows,
+        "doc_id string, span_idx int, parent_idx int, join_kind string, priority int, depth int",
+    )
+    caps = _cycle_caps(spark, ["p1", "p2"] + ["p1"] * n, [0, n + 1])
+    out = attach_pages(tree, caps)
+    got = {r["span_idx"]: r for r in out.collect()}
+    assert got[1]["join_kind"] == "fallback_root"
+    assert got[1]["parent_idx"] == 0
+    depths = {
+        r["span_idx"]: r["depth"]
+        for r in stats.compute_depths(out, depth_complete=False).collect()
+    }
+    assert depths == {k: k for k in range(n + 2)}

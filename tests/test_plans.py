@@ -148,8 +148,8 @@ def test_rank_cascade_plan_shape(spark, tmp_path):
     assert joins == 1, f"rank cascade must plan exactly 1 join, got {joins}"
     assert "LeftAnti" not in plan
     # the join must be SHUFFLED-HASH reusing the window's (doc_id, key)
-    # partitioning on the target side (default SPARK_GRAFT_CASCADE_JOIN):
-    # no driver broadcast build, and the probe/window input exchanges
+    # partitioning on the target side (the constant shuffle_hash hint): no
+    # driver broadcast build, and the probe/window input exchanges
     # materialize concurrently
     assert re.search(r"\(\d+\) ShuffledHashJoin", plan), plan
     assert "BroadcastExchange" not in plan
@@ -293,3 +293,28 @@ def test_cookie_surface_single_scan(spark, tmp_path):
     rplan = rep._jdf.queryExecution().executedPlan().toString()
     assert rplan.count("Scan binaryFile") == 0, rplan
     assert rplan.count("FlatMapGroupsInPandas") == 0, rplan
+
+
+def test_plan_audit_counts_map_in_arrow():
+    """tools/plan_audit.py counts every Python node, MapInArrow included
+    (the exact cascade kernel's entry). Pure text: no Spark session."""
+    from tools.plan_audit import summarize
+
+    plan = """== Physical Plan ==
+MapInArrow (3)
++- * Sort (2)
+   +- Exchange (1)
+
+(1) Exchange
+Arguments: hashpartitioning(doc_id#0, 8), REPARTITION_BY_NUM
+
+(2) Sort [codegen id : 1]
+Arguments: [doc_id#0 ASC NULLS FIRST], false, 0
+
+(3) MapInArrow
+Arguments: cascade_batch_arrow(doc_id#0), [doc_id#1], false
+"""
+    s = summarize(plan)
+    assert s["python_stages"] == 1
+    assert s["exchanges"] == 1
+    assert s["codegen_spans"] == 1

@@ -74,6 +74,47 @@ def test_depths_mixed_frame_recomputed(spark):
     assert list(d.depth) == [0, 1, 2, 3]
 
 
+def test_ancestors_roots_depths_and_cycles(spark):
+    """The one pointer-doubling walk on a hand-built edge set: a chain, a
+    doc with two roots (null and -1 parents), a self-loop, and a 2- and a
+    3-cycle each with a tail. Cycle members are flagged; neither they nor
+    their tails reach a root, so both get a null root and depth."""
+    rows = [
+        ("chain", 0, -1), ("chain", 1, 0), ("chain", 2, 1), ("chain", 3, 2),
+        ("two", 0, None), ("two", 1, 0), ("two", 5, -1), ("two", 6, 5),
+        ("self", 0, -1), ("self", 1, 1), ("self", 2, 1),
+        ("cyc", 0, -1), ("cyc", 1, 2), ("cyc", 2, 1), ("cyc", 3, 2), ("cyc", 4, 3),
+        ("cyc", 10, 11), ("cyc", 11, 12), ("cyc", 12, 10), ("cyc", 13, 12),
+    ]
+    edges = spark.createDataFrame(rows, "doc_id string, node int, parent int")
+    got = {
+        (r["doc_id"], r["node"]): (r["root"], r["depth"], r["on_cycle"])
+        for r in stats.ancestors(edges).collect()
+    }
+    assert got == {
+        ("chain", 0): (0, 0, False),
+        ("chain", 1): (0, 1, False),
+        ("chain", 2): (0, 2, False),
+        ("chain", 3): (0, 3, False),
+        ("two", 0): (0, 0, False),
+        ("two", 1): (0, 1, False),
+        ("two", 5): (5, 0, False),
+        ("two", 6): (5, 1, False),
+        ("self", 0): (0, 0, False),
+        ("self", 1): (None, None, True),
+        ("self", 2): (None, None, False),
+        ("cyc", 0): (0, 0, False),
+        ("cyc", 1): (None, None, True),
+        ("cyc", 2): (None, None, True),
+        ("cyc", 3): (None, None, False),
+        ("cyc", 4): (None, None, False),
+        ("cyc", 10): (None, None, True),
+        ("cyc", 11): (None, None, True),
+        ("cyc", 12): (None, None, True),
+        ("cyc", 13): (None, None, False),
+    }
+
+
 def test_tile_assignment_levels(spark):
     docs = gen_docs(3, 40)
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)

@@ -54,8 +54,8 @@ def summarize(plan: str) -> dict:
         "broadcast_joins": n("BroadcastHashJoin", "BroadcastNestedLoopJoin"),
         "shuffle_joins": n("SortMergeJoin", "ShuffledHashJoin"),
         "python_stages": n(
-            "MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas",
-            "BatchEvalPython",
+            "MapInArrow", "MapInPandas", "ArrowEvalPython",
+            "FlatMapGroupsInPandas", "BatchEvalPython",
         ),
         "windows": n("Window"),
         "aggregates": n("HashAggregate", "SortAggregate", "ObjectHashAggregate"),
@@ -86,9 +86,9 @@ def main() -> None:
         "q1_cascade_exact": (
             cascade.resolve_exact(feats),
             "One hash exchange on doc_id feeds the Tungsten sort + the "
-            "Arrow-batched consume-once kernel (MapInPandas); everything "
+            "Arrow-batched consume-once kernel (MapInArrow); everything "
             "before it is codegen'd narrow parse. The explicit "
-            "4-tasks/core repartition is the only shuffle.",
+            "1-task/core repartition is the only shuffle.",
         ),
         "q2_cascade_rank": (
             cascade.resolve_rank(feats),
@@ -173,7 +173,8 @@ def main() -> None:
         "",
         "Python stages appear ONLY where they are the designed "
         "Arrow-batched path: q1/q4's consume-once DFS kernel (the "
-        "reference-exact contract) and q8's fused signature matmul "
+        "reference-exact contract; MapInArrow), q4's distributed document "
+        "generator (MapInPandas) and q8's fused signature matmul "
         "(vectorized pandas_udf over stacked hyperplanes). No "
         "row-at-a-time Python anywhere; every other headline query is "
         "fully JVM-side. `test_plans.py` pins the load-bearing subset of "
