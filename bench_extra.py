@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entrymod  # noqa: E402
 from har2tree_spark.datagen import GenConfig, gen_documents_df  # noqa: E402
 from har2tree_spark.operators import cascade, parse, tiling  # noqa: E402
-from har2tree_spark.session import get_spark  # noqa: E402
+from har2tree_spark.session import cpus_from_env, get_spark  # noqa: E402
 from har2tree_spark.sources import events_spans  # noqa: E402
 
 
@@ -38,7 +38,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus_from_env()
     spark = get_spark(
         "bench_extra", parallelism=cpus, shuffle_partitions=4 * cpus,
         driver_memory="24g",

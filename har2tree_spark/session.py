@@ -12,6 +12,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def cpus_from_env() -> int:
+    """The local core count: $SPARK_GRAFT_CPUS, or 32 when unset.  The
+    package's one reader of the variable; a value that is not an integer
+    >= 1 raises instead of running at a silently wrong parallelism."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        if (cpus := int(raw)) >= 1:
+            return cpus
+    except ValueError:
+        pass
+    raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw!r}")
+
+
 def get_spark(
     app_name: str = "har2tree_spark",
     parallelism: int | None = None,
@@ -21,13 +34,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    parallelism: local[N] core count. Defaults to $SPARK_GRAFT_CPUS or 32.
+    parallelism: local[N] core count. Defaults to ``cpus_from_env()``.
     shuffle_partitions: defaults to parallelism (local rule: ~= cores; on a
     real cluster this scales with executor count — the N vs 4N scaling
     protocol in BENCH/BASELINE.md sets it proportionally per run).
     """
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        parallelism = cpus_from_env()
     if shuffle_partitions is None:
         shuffle_partitions = parallelism
 

@@ -77,8 +77,11 @@ Mapping dictionary (SURVEY.md SS1.2, reference file:line):
 Scale posture: files are distributed by Spark's ``binaryFile`` source (one
 task per file group, no driver loop); per-file JSON decode runs inside an
 Arrow-batched ``mapInPandas`` -- the ingest boundary is per *file*, exactly
-like the reference's ``json.load``, but parallel across executors.  All
-per-span analytics stay in the unchanged engine operators downstream.
+like the reference's ``json.load``, but parallel across executors.  Every
+reader shares one listing (``_list_files``) and the mapInPandas readers one
+per-file step (``_hars_in``), which also expands ``.harpack`` bundles of
+HAR files, so bundles are plain reader input.  All per-span analytics stay
+in the unchanged engine operators downstream.
 
 Capture sidecars (``read_har_captures``): the reference loads up to six
 optional files shipped next to each HAR, keyed ``{root_name}.*``
@@ -896,20 +899,100 @@ def _load_har_bytes_safe(blob: bytes) -> dict:
     return har if isinstance(har, dict) else {}
 
 
+# Capture file roles, keyed by filename suffix next to the HAR (reference
+# har2tree.py:127-179) -- the ONLY place that knows HAR suffixes: file and
+# bundle-member doc_ids, the captures tagger and the captures listing glob
+# all derive from it.  HAR suffixes are listed in preference order (foo.har
+# beats foo.har.gz for one capture).  No suffix is a suffix of another, so
+# match order is otherwise irrelevant; .png / uuid / meta are deliberately
+# absent (the reference HarFile never reads them -- they are Lookyloo-level
+# artifacts).
+_CAPTURE_ROLES = (
+    (".har", "har"),
+    (".har.gz", "har"),
+    (".last_redirect.txt", "last_redirect"),
+    (".cookies.json", "cookies"),
+    (".frames.json", "frames"),
+    (".data.filename", "data_filename"),
+    (".data", "data"),
+    (".html", "html"),
+)
+_HAR_SUFFIXES = tuple(suf for suf, role in _CAPTURE_ROLES if role == "har")
+_CAPTURE_GLOB = "*.{" + ",".join(suf[1:] for suf, _ in _CAPTURE_ROLES) + "}"
+
+# plain-tar bundle of HAR files (tools/pack_captures.py)
+_BUNDLE_SUFFIX = ".harpack"
+
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:/+")
 
 
-def _doc_id_of(path: str, root: str) -> str:
-    # Hadoop paths render as file:/x or hdfs://host/x — strip either form
+def _rel_path(path: str, root: str) -> str:
+    """``path`` relative to the reader's root; Hadoop paths render as
+    file:/x or hdfs://host/x -- strip either form."""
     p = _SCHEME_RE.sub("/", path)
     r = _SCHEME_RE.sub("/", root).rstrip("/")
-    if p.startswith(r + "/"):
-        p = p[len(r) + 1 :]
-    for suffix in (".har.gz", ".har"):
-        if p.endswith(suffix):
-            p = p[: -len(suffix)]
-            break
-    return p
+    return p[len(r) + 1 :] if p.startswith(r + "/") else p
+
+
+def _har_stem(name: str) -> str | None:
+    """``name`` minus its HAR suffix, or None when it is not a HAR."""
+    for suffix in _HAR_SUFFIXES:
+        if name.endswith(suffix):
+            return name[: -len(suffix)]
+    return None
+
+
+def _list_files(spark, path: str, pattern: str, max_files: int | None = None):
+    """The one binaryFile listing every reader runs: (path, content) of the
+    files under ``path`` matching ``pattern``, recursively.  Batch by
+    default; with ``max_files`` a file stream admitting at most that many
+    new files per micro-batch (a streaming source cannot infer its schema,
+    and binaryFile's is fixed)."""
+    if max_files is None:
+        reader = spark.read.format("binaryFile")
+    else:
+        reader = (
+            spark.readStream.format("binaryFile")
+            .schema("path string, modificationTime timestamp, length long, content binary")
+            .option("maxFilesPerTrigger", max_files)
+        )
+    return (
+        reader.option("pathGlobFilter", pattern)
+        .option("recursiveFileLookup", "true")
+        .load(path)
+        .select("path", "content")
+    )
+
+
+def _hars_in(path: str, blob: bytes, root: str):
+    """The one per-file step every mapInPandas reader runs: yields
+    (doc_id, HAR dict) per capture in one listed file.
+
+    A HAR file is one capture keyed by its root-relative path minus the
+    HAR suffix; a ``.harpack`` bundle (plain tar, tools/pack_captures.py)
+    one per HAR member keyed by its archive name minus the suffix, so
+    bundles packed from a corpus root keep the tree's doc_ids.  Total like
+    _load_har_bytes_safe: a bundle that cannot be walked (truncated, not a
+    tar) is one empty quarantine capture keyed by its own path."""
+    rel = _rel_path(path, root)
+    if not rel.endswith(_BUNDLE_SUFFIX):
+        yield _har_stem(rel) or rel, _load_har_bytes_safe(blob)
+        return
+    import io  # noqa: PLC0415
+    import tarfile  # noqa: PLC0415
+
+    try:
+        with tarfile.open(fileobj=io.BytesIO(blob), mode="r:") as tf:
+            members = [
+                (stem, tf.extractfile(m).read())
+                for m in tf
+                if m.isfile() and (stem := _har_stem(m.name)) is not None
+            ]
+    except tarfile.TarError:
+        yield rel[: -len(_BUNDLE_SUFFIX)], {}
+        return
+    for doc_id, data in members:
+        yield doc_id, _load_har_bytes_safe(data)
 
 
 def _docs_from_binary(raw, root: str):
@@ -920,8 +1003,9 @@ def _docs_from_binary(raw, root: str):
     def run(batches):
         for pdf in batches:
             rows = [
-                har_to_doc(_doc_id_of(p, root), _load_har_bytes_safe(c))
+                har_to_doc(doc_id, har)
                 for p, c in zip(pdf["path"].tolist(), pdf["content"].tolist())
+                for doc_id, har in _hars_in(p, c, root)
             ]
             yield pd.DataFrame(rows, columns=["doc_id", "spans"])
 
@@ -929,78 +1013,24 @@ def _docs_from_binary(raw, root: str):
 
 
 def read_har_dir(spark, path: str, pattern: str = "*.har"):
-    """Directory of HAR files -> documents DataFrame (DOCUMENTS_SCHEMA).
+    """Directory of HAR files and/or ``.harpack`` bundles -> documents
+    DataFrame (DOCUMENTS_SCHEMA); ``pattern="*.harpack"`` reads bundles,
+    row-identical to the unpacked tree.
 
     Distributed: the binaryFile source assigns files to tasks; each task
     parses its files inside one Arrow batch -- no driver-side loop, no
     per-span Python (all span analytics happen in the engine operators
     downstream)."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
-    return _docs_from_binary(raw, path)
-
-
-def read_har_packed(spark, path: str, pattern: str = "*.harpack"):
-    """Packed-capture ingest arm (r7 VERDICT #8; guide §6 small-files):
-    plain-tar bundles of HAR files (as written by tools/pack_captures.py)
-    -> documents DataFrame (DOCUMENTS_SCHEMA), row-identical to
-    ``read_har_dir`` over the unpacked tree.
-
-    Rationale: at ~32 KB/capture the ingest cost driver is the FILE
-    BOUNDARY (listing + per-file open + Arrow framing), not the JSON
-    decode — the no-parse scan floor alone is ~55% of full-ingest wall
-    (BENCH/BASELINE.md r7 ingest table).  Packing N captures per bundle
-    turns N listing/open/frame cycles into one; the unpack (uncompressed
-    tar = header walk + memoryview slices) runs inside the SAME
-    mapInPandas closure that parses, so no second pass and no driver
-    state.  doc_id = the member's archive name minus .har/.har.gz —
-    bundles written from a corpus root reproduce read_har_dir's ids."""
-    import pandas as pd  # noqa: PLC0415
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("content")
-    )
-
-    def run(batches):
-        import io  # noqa: PLC0415
-        import tarfile  # noqa: PLC0415
-
-        for pdf in batches:
-            rows = []
-            for c in pdf["content"].tolist():
-                with tarfile.open(fileobj=io.BytesIO(c), mode="r:") as tf:
-                    for m in tf:
-                        if not m.isfile():
-                            continue
-                        name = m.name
-                        for suffix in (".har.gz", ".har"):
-                            if name.endswith(suffix):
-                                doc_id = name[: -len(suffix)]
-                                break
-                        else:
-                            continue
-                        data = tf.extractfile(m).read()
-                        rows.append(har_to_doc(doc_id, _load_har_bytes_safe(data)))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    return raw.mapInPandas(run, schema=DOCUMENTS_SCHEMA)
+    return _docs_from_binary(_list_files(spark, path, pattern), path)
 
 
 def stream_har_documents(spark, path: str, pattern: str = "*.har", max_files: int = 8):
     """Streaming HAR arrivals -> documents STREAM (DOCUMENTS_SCHEMA).
 
     The reference is strictly batch; this is the engine's streaming
-    extension applied at the ingest boundary: new capture files dropped
-    into the directory become document rows in the next micro-batch, and
+    extension applied at the ingest boundary: new capture files (or
+    ``.harpack`` bundles, e.g. ``pattern="*.{har,harpack}"``) dropped into
+    the directory become document rows in the next micro-batch, and
     `streaming.ingest.incremental_pipeline` runs the unchanged batch
     operators over them with exactly-once file tracking via the streaming
     checkpoint (file-source semantics: each file is processed exactly one
@@ -1009,45 +1039,7 @@ def stream_har_documents(spark, path: str, pattern: str = "*.har", max_files: in
     (read_har_captures): a capture's sidecar files can straddle
     micro-batches, so grouping them in a stream would need session-window
     state for no user-visible gain."""
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    # a streaming source cannot infer its schema; binaryFile's is fixed
-    binary_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), True),
-            T.StructField("modificationTime", T.TimestampType(), True),
-            T.StructField("length", T.LongType(), True),
-            T.StructField("content", T.BinaryType(), True),
-        ]
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("pathGlobFilter", pattern)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", max_files)
-        .load(path)
-        .select("path", "content")
-    )
-    return _docs_from_binary(raw, path)
-
-
-# Sidecar roles, keyed by filename suffix next to the HAR (reference
-# har2tree.py:127-179).  No suffix is a suffix of another, so match order
-# is irrelevant; .png / uuid / meta are deliberately absent (the reference
-# HarFile never reads them -- they are Lookyloo-level artifacts).
-_CAPTURE_ROLES = (
-    (".har.gz", "har"),
-    (".har", "har"),
-    (".last_redirect.txt", "last_redirect"),
-    (".cookies.json", "cookies"),
-    (".frames.json", "frames"),
-    (".data.filename", "data_filename"),
-    (".data", "data"),
-    (".html", "html"),
-)
-
-_CAPTURE_GLOB = "*.{har,har.gz,last_redirect.txt,cookies.json,frames.json,data,data.filename,html}"
+    return _docs_from_binary(_list_files(spark, path, pattern, max_files), path)
 
 
 def captures_schema():
@@ -1127,13 +1119,7 @@ def read_har_captures(spark, path: str):
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", _CAPTURE_GLOB)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
+    raw = _list_files(spark, path, _CAPTURE_GLOB)
     role = F.lit(None).cast("string")
     cap = F.lit(None).cast("string")
     for suf, r in _CAPTURE_ROLES:
@@ -1160,10 +1146,11 @@ def read_har_captures(spark, path: str):
         if not hars:
             return pd.DataFrame(columns=cols)
         # foo.har and foo.har.gz share the capture key: deterministic
-        # winner is the uncompressed .har (then lexicographic path), never
-        # whichever row the scan happened to order last
+        # winner is the first suffix in _HAR_SUFFIXES order (then
+        # lexicographic path), never whichever row the scan ordered last
         _, har_bytes = min(
-            hars, key=lambda pc: (0 if pc[0].endswith(".har") else 1, pc[0])
+            hars,
+            key=lambda pc: ([pc[0].endswith(s) for s in _HAR_SUFFIXES].index(True), pc[0]),
         )
         capture = pdf["capture"].iloc[0]
         sidecars = {
@@ -1172,7 +1159,7 @@ def read_har_captures(spark, path: str):
             if r != "har"
         }
         row = har_to_doc(
-            _doc_id_of(capture, path), _load_har_bytes_safe(har_bytes), sidecars
+            _rel_path(capture, path), _load_har_bytes_safe(har_bytes), sidecars
         )
         return pd.DataFrame([row], columns=cols)
 
@@ -1183,7 +1170,8 @@ def read_har_bodies(spark, path: str, pattern: str = "*.har"):
     """Auxiliary flat scan: (doc_id, span_idx, url, mimetype, body, post)
     per entry with a non-empty decoded body or POST payload -- the feed for
     exercising the soup (F17/F18) and decode (F9/F10/F14) operators on real
-    capture payloads."""
+    capture payloads.  Reads HAR files and ``.harpack`` bundles through the
+    same listing and per-file step as ``read_har_dir``."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql import types as T  # noqa: PLC0415
 
@@ -1197,42 +1185,21 @@ def read_har_bodies(spark, path: str, pattern: str = "*.har"):
             T.StructField("post", T.StringType(), True),
         ]
     )
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-    )
 
     def run(batches):
         for pdf in batches:
             rows = []
             for p, c in zip(pdf["path"].tolist(), pdf["content"].tolist()):
-                doc_id = _doc_id_of(p, path)
-                for i, e in enumerate(_sorted_entries(_load_har_bytes_safe(c))):
-                    body = _body_text(e)
-                    post = str(
-                        _dict(_dict(e.get("request")).get("postData")).get("text", "")
-                        or ""
-                    )
-                    if body or post:
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "span_idx": i,
-                                "url": str(_dict(e.get("request")).get("url", "") or ""),
-                                "mimetype": str(
-                                    _dict(_dict(e.get("response")).get("content"))
-                                    .get("mimeType", "")
-                                    or ""
-                                ),
-                                "body": body,
-                                "post": post,
-                            }
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "span_idx", "url", "mimetype", "body", "post"]
-            )
+                for doc_id, har in _hars_in(p, c, path):
+                    for i, e in enumerate(_sorted_entries(har)):
+                        request = _dict(e.get("request"))
+                        body = _body_text(e)
+                        post = str(_dict(request.get("postData")).get("text", "") or "")
+                        if body or post:
+                            content = _dict(_dict(e.get("response")).get("content"))
+                            url = str(request.get("url", "") or "")
+                            mime = str(content.get("mimeType", "") or "")
+                            rows.append((doc_id, i, url, mime, body, post))
+            yield pd.DataFrame(rows, columns=schema.names)
 
-    return raw.mapInPandas(run, schema=schema)
+    return _list_files(spark, path, pattern).mapInPandas(run, schema=schema)

@@ -22,7 +22,8 @@ from har2tree_spark.sources.har_cookies import entry_cookies
 
 REF_DATA = "/root/reference/tests/data"
 
-pytestmark = pytest.mark.skipif(
+# only the tests that read the reference corpus skip without it
+needs_ref_data = pytest.mark.skipif(
     not os.path.isdir(REF_DATA), reason="reference HAR corpora not present"
 )
 
@@ -182,6 +183,7 @@ def test_initial_cookies_from_root_span(spark, cookie_capture_dir):
     assert init == {("cookie", "seen=1")}
 
 
+@needs_ref_data
 def test_lalibre_cookie_literals(spark):
     """Real-corpus pin: the lalibre captures' cookie surface, counted once
     and asserted literally so adapter regressions surface immediately."""
@@ -206,6 +208,7 @@ def test_lalibre_cookie_literals(spark):
 PINNED_LALIBRE = (3, 511, 1079, 5482)
 
 
+@needs_ref_data
 def test_cookie_ops_duckdb_cross_check(spark, tmp_path):
     """Value-exact DuckDB cross-check of the relational cookie operators on
     the REAL lalibre corpus: the flat cookie table round-trips through

@@ -165,27 +165,51 @@ def test_incremental_pipeline_restart_exactly_once(spark):
         assert got.groupBy("doc_id", "span_idx").count().filter("count > 1").count() == 0
 
 
+def _capture_har(n: int) -> dict:
+    """A small capture: a landing page whose body embeds a stylesheet and
+    a script, plus an image loaded with a Referer -- enough relations for
+    a multi-level tree."""
+    base = f"https://site{n}.example/"
+
+    def entry(url, second, mime, body="", referer=""):
+        headers = [{"name": "Referer", "value": referer}] if referer else []
+        return {
+            "startedDateTime": f"2024-01-01T00:00:0{second}.000Z",
+            "request": {"url": url, "headers": headers},
+            "response": {"status": 200, "content": {"mimeType": mime, "text": body}},
+        }
+
+    return {"log": {"entries": [
+        entry(base, 0, "text/html",
+              body='<html><link href="s.css"><script src="a.js"></script></html>'),
+        entry(base + "s.css", 1, "text/css"),
+        entry(base + "a.js", 2, "application/javascript"),
+        entry(base + "i.png", 3, "image/png", referer=base),
+    ]}}
+
+
 def test_streaming_har_ingestion_two_waves(spark):
     # streaming HAR arrivals (sources/har_source.stream_har_documents):
-    # wave 1 lands three real capture files, wave 2 two more; the file
-    # source's checkpoint processes each file exactly once, and the union
-    # equals the batch reader + pipeline over all five
+    # wave 1 lands three capture files, wave 2 one .harpack bundle of two
+    # more; the file source's checkpoint processes each file exactly once,
+    # and the union equals the batch reader + pipeline over all five
+    import json
     import os
     import shutil
 
     from har2tree_spark.sources import har_source
+    from tools.pack_captures import pack_dir
 
-    ref = "/root/reference/tests/data/lalibre"
-    if not os.path.isdir(ref):
-        import pytest
-
-        pytest.skip("reference HAR corpora not present")
+    pattern = "*.{har,harpack}"
     with tempfile.TemporaryDirectory() as tmp:
         indir, out, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
         os.makedirs(indir)
-        for f in ("001.har", "002.har", "003.har"):
-            shutil.copy(f"{ref}/{f}", f"{indir}/{f}")
-        stream = har_source.stream_har_documents(spark, indir, max_files=2)
+        os.makedirs(f"{tmp}/wave2")
+        for n in range(1, 6):
+            dest = indir if n <= 3 else f"{tmp}/wave2"
+            with open(f"{dest}/00{n}.har", "w") as fh:
+                json.dump(_capture_har(n), fh)
+        stream = har_source.stream_har_documents(spark, indir, pattern=pattern, max_files=2)
         q = ingest.incremental_pipeline(stream, out, ckpt).start()
         q.awaitTermination(120)
         first = spark.read.parquet(f"{out}/join_result")
@@ -194,9 +218,9 @@ def test_streaming_har_ingestion_two_waves(spark):
         n_epochs_1 = first.select("epoch").distinct().count()
         assert n_epochs_1 >= 2  # maxFilesPerTrigger=2 over 3 files
 
-        for f in ("004.har", "005.har"):
-            shutil.copy(f"{ref}/{f}", f"{indir}/{f}")
-        stream2 = har_source.stream_har_documents(spark, indir, max_files=2)
+        assert pack_dir(f"{tmp}/wave2", f"{tmp}/packed") == 1
+        shutil.move(f"{tmp}/packed/bundle-00000.harpack", f"{indir}/wave2.harpack")
+        stream2 = har_source.stream_har_documents(spark, indir, pattern=pattern, max_files=2)
         q2 = ingest.incremental_pipeline(stream2, out, ckpt).start()
         q2.awaitTermination(120)
         got = spark.read.parquet(f"{out}/join_result")
@@ -207,7 +231,7 @@ def test_streaming_har_ingestion_two_waves(spark):
         assert got.count() == got.dropDuplicates(["doc_id", "span_idx"]).count()
 
         want = resolve_exact(
-            parse_documents(har_source.read_har_dir(spark, indir))
+            parse_documents(har_source.read_har_dir(spark, indir, pattern=pattern))
         )
         assert got.count() == want.count()
         key = ["doc_id", "span_idx", "parent_idx", "join_kind"]

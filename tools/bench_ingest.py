@@ -2,7 +2,7 @@
 corpus, replicated to amortize fixed cost (BENCH/BASELINE.md 'ingest'
 section).
 
-Measures three legs at local[$SPARK_GRAFT_CPUS] (default 32):
+Measures four legs at local[$SPARK_GRAFT_CPUS] (default 32):
 
   1. listing+bytes floor — binaryFile scan + byte count, no parsing
      (the Spark-side cost with a no-op parse closure);
@@ -10,7 +10,9 @@ Measures three legs at local[$SPARK_GRAFT_CPUS] (default 32):
      har_to_doc span construction inside mapInPandas;
   3. single-process python floor — json.loads + har_to_doc over the same
      files in one local loop (the reference's execution model: one
-     CPython thread).
+     CPython thread);
+  4. packed ingest — the same files in plain-tar bundles
+     (tools/pack_captures.py), read by read_har_dir(pattern="*.harpack").
 
 docs/sec = replicated HAR files per second of leg 2; the bottleneck note
 in BASELINE.md compares leg 2 against legs 1 and 3 (parallel speedup and
@@ -30,7 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from har2tree_spark.session import get_spark  # noqa: E402
+from har2tree_spark.session import cpus_from_env, get_spark  # noqa: E402
 from har2tree_spark.sources import har_source  # noqa: E402
 
 LALIBRE = "/root/reference/tests/data/lalibre"
@@ -38,7 +40,7 @@ LALIBRE = "/root/reference/tests/data/lalibre"
 
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus_from_env()
     src = sorted(os.listdir(LALIBRE))
     work = tempfile.mkdtemp(prefix="ingest_bench_")
     n_files = 0
@@ -58,13 +60,7 @@ def main() -> None:
 
     # leg 1: listing + bytes, no parse
     t0 = time.time()
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.har")
-        .option("recursiveFileLookup", "true")
-        .load(work)
-        .select("path", "content")
-    )
+    raw = har_source._list_files(spark, work, "*.har")
     total_bytes = raw.selectExpr("sum(length(content))").collect()[0][0]
     floor_s = time.time() - t0
 
@@ -76,7 +72,7 @@ def main() -> None:
         ingest_s = min(ingest_s, time.time() - t0)
 
     # leg 4 (r7 VERDICT #8): the same corpus packed into plain-tar
-    # bundles (tools/pack_captures.py), read by read_har_packed — same
+    # bundles (tools/pack_captures.py), read by read_har_dir — same
     # parse, one file boundary per bundle instead of per capture
     from tools.pack_captures import pack_dir  # noqa: PLC0415
 
@@ -86,7 +82,7 @@ def main() -> None:
     packed_s = float("inf")
     for _ in range(2):
         t0 = time.time()
-        n_packed = har_source.read_har_packed(spark, packed).count()
+        n_packed = har_source.read_har_dir(spark, packed, pattern="*.harpack").count()
         packed_s = min(packed_s, time.time() - t0)
     assert n_packed == n_docs, (n_packed, n_docs)
     shutil.rmtree(packed, ignore_errors=True)

@@ -31,14 +31,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from har2tree_spark.operators import cascade, lineage, parse, stats, tiling  # noqa: E402
-from har2tree_spark.session import get_spark  # noqa: E402
+from har2tree_spark.session import cpus_from_env, get_spark  # noqa: E402
 
 
 def main() -> None:
     corpus = sys.argv[1]
     base = sys.argv[2]
     kill_after = os.environ.get("SPARK_GRAFT_KILL_AFTER")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = cpus_from_env()
     spark = get_spark(
         "resume_demo", parallelism=cpus, shuffle_partitions=4 * cpus,
         driver_memory="24g",

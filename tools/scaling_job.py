@@ -18,12 +18,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from har2tree_spark.operators import cascade, parse, stats, tiling  # noqa: E402
-from har2tree_spark.session import get_spark  # noqa: E402
+from har2tree_spark.session import cpus_from_env, get_spark  # noqa: E402
 
 
 def main() -> None:
     corpus = sys.argv[1]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus_from_env()
     # shuffle partitions scale with the core count, as they would with
     # executor count on a cluster (BASELINE.md protocol); 4 tasks per core
     # so the scheduler absorbs stragglers instead of the slowest partition
