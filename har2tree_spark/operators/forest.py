@@ -114,7 +114,9 @@ def forest_roots(edges: DataFrame, all_docs: DataFrame) -> DataFrame:
 def forest_join(features: DataFrame, join_result: DataFrame) -> DataFrame:
     """Full forest assembly: cross-doc edges + root resolution.
     Returns (doc_id, parent_doc nullable, forest_root)."""
-    edges = forest_edges(features, join_result).persist()
+    # read twice (the walk and the parent_doc join): one eager checkpoint,
+    # freed with the frame, not a persist() left in the CacheManager
+    edges = forest_edges(features, join_result).localCheckpoint()
     docs = features.filter(F.col("n_live") > 0).select("doc_id").distinct()
     roots = forest_roots(edges, docs)
     return (

@@ -78,7 +78,7 @@ def _resolve_media(m: Column) -> Column:
     return F.when(m.startswith(_STACK_PREFIX), resolved).otherwise(m)
 
 
-def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
+def parse_documents(docs: DataFrame) -> DataFrame:
     """documents -> features (FEATURES_SCHEMA + ref_tokens, coarse_cell,
     root_idx, n_live). One output row per surviving span."""
     spans = F.coalesce(F.col("spans"), F.array())
@@ -130,7 +130,6 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
     step1 = docs.select(F.col("doc_id"), parsed.alias("_parsed"))
     step2 = step1.select(
         "doc_id",
-        "_parsed",
         F.filter(F.col("_parsed"), lambda p: ~p["dropped"]).alias("_live"),
     )
     # doc root = first live span by (offset, span_idx) — har2tree.py:428
@@ -141,16 +140,13 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
         "doc_id",
         F.coalesce(root, F.lit(-1)).alias("root_idx"),
         F.size(F.col("_live")).alias("n_live"),
-        "_parsed",
         "_live",
     )
     out = step3.select(
         "doc_id",
         "root_idx",
         "n_live",
-        F.posexplode_outer(
-            F.col("_parsed") if keep_dropped else F.col("_live")
-        ).alias("pos", "p"),
+        F.posexplode_outer(F.col("_live")).alias("pos", "p"),
     )
 
     key = F.col("p.key")
@@ -195,17 +191,3 @@ def parse_documents(docs: DataFrame, keep_dropped: bool = False) -> DataFrame:
         F.transform(F.col("ref_tokens"), grid.col_key_num),
     )
 
-
-def quarantine_empty_docs(docs: DataFrame) -> DataFrame:
-    """Docs with no surviving spans (Har2TreeError analogue,
-    har2tree.py:244-248) — routed to lineage, not failure."""
-    live = F.filter(
-        F.coalesce(F.col("spans"), F.array()),
-        lambda s: ~(
-            (_span_key(s).isNull())
-            & (_resolve_media(F.coalesce(s["media_ref"], F.lit(""))) == "")
-            & (F.coalesce(s["text"], F.lit("")) == "")
-        )
-        & (F.coalesce(s["kind"], F.lit("")) != "empty"),
-    )
-    return docs.filter(F.size(live) == 0).select("doc_id")

@@ -1,22 +1,27 @@
 """End-to-end pipeline: documents -> features -> cascade -> tiles -> stats.
 
 The flagship flow (reference CrawledTree lifecycle, SURVEY.md §3) with
-per-stage lineage. Shuffle budget at scale:
+per-stage lineage. ``run_pipeline`` owns materialisation: it fans
+``features`` and ``join_result`` out to several outputs, so it takes one
+eager ``localCheckpoint`` of each and every output reads those two
+checkpoints (the operators themselves stay lazy). Shuffle budget:
 
   parse          narrow (array-level ops)            0 shuffles
-  cascade exact  repartition(doc_id) mapInArrow      1 shuffle (none if the
-                                                     source is bucketed/
-                                                     partitioned by doc_id)
+  features       localCheckpoint                     1 eager job
+  cascade exact  repartition(n, doc_id) mapInArrow   1 shuffle (explicit
+                                                     count: always shuffles)
+  cascade rank   probe->target join + min_by         <=3 shuffles
+  join_result    localCheckpoint                     1 eager job
   tiles          narrow projection                   0 shuffles
-  tile_rollup    groupBy(level, cell)                1 shuffle (AQE-skew
-                                                     aware; hot cells salted)
-  doc_stats      groupBy(doc_id)                     co-partitioned with
-                                                     cascade output
+  tile_rollup    groupBy(level, cell)                1 shuffle (map-side
+                                                     partial combine; AQE
+                                                     splits skewed stages)
+  doc_stats      groupBy(doc_id) over both           joins on doc_id; rank
+                 checkpoints                         mode adds the depth
+                                                     walk's jobs
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,53 +29,37 @@ from pyspark.sql import functions as F
 from har2tree_spark.operators import cascade, parse, stats, tiling
 
 
-def run_pipeline(
-    docs: DataFrame,
-    mode: str = "exact",
-    with_depths: bool = True,
-) -> dict[str, DataFrame]:
+def run_pipeline(docs: DataFrame, mode: str = "exact") -> dict[str, DataFrame]:
     """Returns the engine's output tables. ``mode``: 'exact' (reference
-    parity, mapInArrow kernel) or 'rank' (single-window relational)."""
-    features = parse.parse_documents(docs)
+    parity, mapInArrow kernel) or 'rank' (single-aggregate relational).
+
+    Eager: the call runs the parse and the cascade once each, into
+    ``localCheckpoint``s that every output reads. Not ``persist()``: (a) a
+    lazy persist lets the branches of one cold job race to compute the
+    uncached upstream concurrently (measured ~5x the upstream cost); (b) a
+    ``persist()`` entry lives in the CacheManager until someone calls
+    unpersist, so repeated calls on a long-lived driver (bench, streaming
+    foreachBatch) accumulate cached tables, while checkpoint blocks are
+    freed by the ContextCleaner when the frame is garbage-collected."""
+    features = parse.parse_documents(docs).localCheckpoint()
     join_result = (
         cascade.resolve_exact(features) if mode == "exact" else cascade.resolve_rank(features)
-    )
+    ).localCheckpoint()
     tiles = tiling.tile_assignment(features)
-    out: dict[str, DataFrame] = {
+    return {
         "features": features,
         "join_result": join_result,
         "tiles": tiles,
         "tile_rollup": tiling.tile_rollup(tiles),
         "quarantine": features.filter(F.col("n_live") == 0).select("doc_id").distinct(),
-    }
-    if with_depths:
-        out["doc_stats"] = stats.doc_stats(features, join_result)
-    # span-sequence invariant surface: the document rows pass through
-    # untouched, joined with their computed root — proving the engine only
-    # re-parents, never mutates/reorders spans (BASELINE.json input_hint)
-    out["enriched_documents"] = docs.join(
-        features.select("doc_id", "root_idx").distinct(), "doc_id", "left"
-    )
-    return out
-
-
-def run_and_measure(
-    spark: SparkSession, docs: DataFrame, mode: str = "exact"
-) -> dict[str, float]:
-    """Materialize the pipeline, returning docs/sec throughput — the
-    BASELINE.md headline metric."""
-    t0 = time.time()
-    out = run_pipeline(docs, mode=mode, with_depths=True)
-    n_join = out["join_result"].count()
-    n_tiles = out["tile_rollup"].count()
-    n_stats = out["doc_stats"].count()
-    wall = time.time() - t0
-    return {
-        "docs": float(n_stats),
-        "join_rows": float(n_join),
-        "tiles": float(n_tiles),
-        "wall_s": wall,
-        "docs_per_sec": n_stats / wall if wall > 0 else 0.0,
+        "doc_stats": stats.doc_stats(features, join_result),
+        # span-sequence invariant surface: the document rows pass through
+        # untouched, joined with their computed root — proving the engine
+        # only re-parents, never mutates/reorders spans (BASELINE.json
+        # input_hint)
+        "enriched_documents": docs.join(
+            features.select("doc_id", "root_idx").distinct(), "doc_id", "left"
+        ),
     }
 
 
@@ -102,7 +91,7 @@ def capture_report(spark: SparkSession, path: str) -> DataFrame:
     from har2tree_spark.sources import har_cookies, har_source  # noqa: PLC0415
 
     # ONE binaryFile listing + ONE JSON parse per capture, materialized
-    # eagerly (the cascade.py localCheckpoint rationale applies): the
+    # eagerly (the run_pipeline localCheckpoint rationale applies): the
     # report fans the captures frame out to features, the pages ladder,
     # cookie totals and the meta projection — lazily, each consumer
     # re-ran the whole scan+parse subtree (9 binaryFile scans in the

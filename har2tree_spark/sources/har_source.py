@@ -230,12 +230,6 @@ def _redirect_target(entry: dict, url: str, universe: set[str]) -> str:
     return rebuild_url(url, target, universe)
 
 
-def _redirect_media(entry: dict, url: str, universe: set[str]) -> str:
-    """Redirect target as a span key; a target outside the universe keeps
-    its hash key and will take the spatial-fallback path."""
-    return url_key(_redirect_target(entry, url, universe))
-
-
 # the reference's JS-redirect scan (nodes.py:577-586): location.href /
 # window.location / location.replace / location.assign assignments or
 # calls with a quoted literal target, trailing ';' required

@@ -80,3 +80,15 @@ def test_forest_cycle_terminates(spark):
     assert len(fj) == 6
     for d in "XYPQRT":
         assert fj.loc[d, "forest_root"] == d
+
+
+def test_forest_join_leaves_no_cache_entry(spark):
+    # the cross-doc edges are read twice inside forest_join; holding them in
+    # the CacheManager (persist() with no unpersist) would grow the cache by
+    # one table per call on a long-lived driver
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    feats = parse_documents(spark.createDataFrame(_forest_docs(), DOCUMENTS_SCHEMA))
+    rows = forest_join(feats, resolve_exact(feats)).collect()
+    assert len(rows) == 4
+    assert cache.isEmpty()

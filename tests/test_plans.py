@@ -7,6 +7,7 @@ aggregation exchange)."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from har2tree_spark.datagen import gen_documents_df
@@ -162,6 +163,27 @@ def test_rank_cascade_plan_shape(spark, tmp_path):
     # the full edge fan-out
     assert _n_exchanges(plan) <= 3, plan
     assert re.search(r"\(\d+\) (?:SortAggregate|ObjectHashAggregate|HashAggregate)", plan), plan
+
+
+@pytest.mark.parametrize("mode", ["exact", "rank"])
+def test_pipeline_outputs_read_its_checkpoints(spark, tmp_path, mode):
+    """run_pipeline materialises features and join_result once each: no
+    output plan re-runs parse (its posexplode Generate), and none re-runs
+    the cascade (the exact kernel's MapInArrow, the rank probe->target
+    ShuffledHashJoin)."""
+    from har2tree_spark.pipeline import run_pipeline
+
+    p = str(tmp_path / f"docs_{mode}")
+    gen_documents_df(spark, 50, seed=3).write.parquet(p)
+    out = run_pipeline(spark.read.parquet(p), mode=mode)
+    for name, df in out.items():
+        plan = _plan(df)
+        assert "posexplode" not in plan, f"{name} re-runs parse:\n{plan}"
+        assert "MapInArrow" not in plan, f"{name} re-runs the kernel:\n{plan}"
+        if mode == "rank":
+            assert not re.search(r"\(\d+\) ShuffledHashJoin", plan), (
+                f"{name} re-runs the rank cascade:\n{plan}"
+            )
 
 
 def test_lsh_fused_signatures_match_per_table(spark):

@@ -77,8 +77,7 @@ def main() -> None:
     from tools.pack_captures import pack_dir  # noqa: PLC0415
 
     packed = tempfile.mkdtemp(prefix="ingest_bench_packed_")
-    per_bundle = int(os.environ.get("SPARK_GRAFT_PACK_SIZE", "256"))
-    n_bundles = pack_dir(work, packed, per_bundle)
+    n_bundles = pack_dir(work, packed)
     packed_s = float("inf")
     for _ in range(2):
         t0 = time.time()
@@ -111,7 +110,6 @@ def main() -> None:
                 "packed_ingest_sec": round(packed_s, 2),
                 "packed_files_per_sec": round(n_files / packed_s, 1),
                 "n_bundles": n_bundles,
-                "files_per_bundle": per_bundle,
                 "single_python_sec_est": round(single_s, 2),
                 "parallel_speedup_vs_single": round(single_s / ingest_s, 1),
                 "cpus": cpus,
